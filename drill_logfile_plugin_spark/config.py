@@ -64,6 +64,23 @@ def normalize_type(type_string: str) -> str:
     return _TYPE_ALIASES.get(type_string.strip().upper(), VARCHAR)
 
 
+#: Python canonical codec names the JVM spells differently, or knows as
+#: an alias of a different charset (Java's ``cp932`` is IBM-942C, its
+#: ``cp874`` and ``cp950`` are IBM variants too).
+_JVM_SPELLINGS = {
+    "utf-16-le": "UTF-16LE",
+    "utf-16-be": "UTF-16BE",
+    "utf-32-le": "UTF-32LE",
+    "utf-32-be": "UTF-32BE",
+    "cp932": "windows-31j",
+    "cp949": "x-windows-949",
+    "cp874": "x-windows-874",
+    "cp950": "x-windows-950",
+    "mac-roman": "x-MacRoman",
+    "mac-cyrillic": "x-MacCyrillic",
+}
+
+
 @dataclass
 class LogFormatConfig:
     """Configuration for the log scan operator.
@@ -94,10 +111,10 @@ class LogFormatConfig:
     strict_numeric: bool = False  # True = reference's always-fatal numerics
     timestamp_format: str | None = None  # None = reuse date_format (reference
     # quirk: TIMESTAMP parses with the *date* format, LogRecordReader.java:256-258)
-    charset: str = "utf-8"  # r11: legacy-encoded logs (cp1251 exports,
-    # EBCDIC mainframe dumps). utf-8 keeps the JVM spark.read.text path;
-    # anything else routes read_log through the format("log") shim,
-    # whose Python readers decode per line (read_log's docstring).
+    charset: str = "utf-8"  # legacy-encoded logs (cp1251 exports, EBCDIC
+    # mainframe dumps, UTF-16). read_log decodes it inside the JVM scan
+    # (jvm_charset(), read_log's docstring); format("log") decodes with
+    # the Python codec of the same name.
 
     def __post_init__(self) -> None:
         self.validate()
@@ -183,6 +200,36 @@ class LogFormatConfig:
                 f"{getattr(exc, 'java_exception', exc)}"
             ) from None
         self._check_groups(compiled.matcher("").groupCount())
+
+    def jvm_charset(self, spark) -> str:
+        """The JVM name of ``charset``, which ``read_log`` decodes with.
+
+        Resolves the Python codec's canonical name, spelled the way the
+        JVM knows it (:data:`_JVM_SPELLINGS`), through
+        ``java.nio.charset.Charset``. A codec with no JVM charset
+        (``utf-7``, ``hz``) is a setup ``ValueError``. Without a JVM
+        gateway (Spark Connect) the spelled name is returned unchecked.
+        The JVM's tables differ from Python's on a few code points of
+        some charsets (EBCDIC NL 0x15 decodes to LF, not U+0085).
+        """
+        import codecs as _codecs
+
+        canon = _codecs.lookup(self.charset).name
+        name = _JVM_SPELLINGS.get(canon, canon)
+        try:
+            jcharset = spark._jvm.java.nio.charset.Charset
+        except Exception:
+            return name
+        from pyspark.errors import IllegalArgumentException
+
+        try:  # java.nio's unsupported / illegal charset name exceptions
+            return jcharset.forName(name).name()
+        except IllegalArgumentException:
+            raise ValueError(
+                f"Log parser charset {self.charset!r} has no JVM charset, so "
+                "read_log cannot decode it; spark.read.format('log') decodes "
+                "it with the Python codec"
+            ) from None
 
     # -- resolution ----------------------------------------------------------
 

@@ -17,20 +17,16 @@ DataSource API so that
 
 round-trips the reference's README workflow verbatim.
 
-**This is the ergonomics shim, not the performance path.** Python
-DataSource readers execute in Python workers: every line crosses the
-Arrow boundary and the regex runs under Python ``re`` instead of
-``java.util.regex`` (the engine-divergence class the package's config
-validation guards against — see log_reader.py's design note, which is
-why ``read_log`` deliberately plans the parse as JVM expressions
-instead). The shim keeps the overhead bounded — per-file readers emit
-Arrow RecordBatches, not per-row pickled tuples — and its output is
-pinned row-for-row against ``read_log`` on the reference fixtures
-(tests/test_log_datasource.py), but large scans should use
-``read_log``: same config surface, whole-stage codegen, splittable
-files. Patterns valid only under ``java.util.regex`` (possessive
-quantifiers, ``\\p{javaLowerCase}``) are rejected here rather than
-silently reinterpreted.
+**This is the ergonomics shim, not the performance path; ``read_log``
+never routes through it.** Its readers run in Python workers: every
+line crosses the Arrow boundary (as RecordBatches) and the regex runs
+under Python ``re``, not ``java.util.regex`` (log_reader.py's design
+note). Its rows are pinned against ``read_log``'s, but large scans
+should use ``read_log``: same config surface, whole-stage codegen,
+splittable files. Only the shim's ``charset`` option also reads Python
+codecs with no JVM charset (``utf-7``, ``hz``). Patterns valid only
+under ``java.util.regex`` (possessive quantifiers,
+``\\p{javaLowerCase}``) are rejected here, not silently reinterpreted.
 
 Semantics mirrored from the reference scan (same contract as
 ``parse_lines``, log_reader.py):
@@ -405,11 +401,17 @@ class LogDataSourceReader(DataSourceReader):
             else None,
         }
 
+        with_year = {
+            f for f in fmts.values() if f and re.search("%[Yy]", f.replace("%%", ""))
+        }
+
         def temporal(raw, fmt):
             try:
-                return _dt.datetime.strptime(_WS_RUN.sub(" ", raw), fmt)
+                ts = _dt.datetime.strptime(_WS_RUN.sub(" ", raw), fmt)
             except ValueError:
                 return None
+            # strptime's default year is 1900; read_log's is 1970
+            return ts if fmt in with_year else ts.replace(year=1970)
 
         def coerce(raw, tag, name, where):
             if tag == VARCHAR:
@@ -527,31 +529,6 @@ class LogDataSource(DataSource):
 def register_log_datasource(spark) -> None:
     """Install ``format("log")`` on a session (idempotent)."""
     spark.dataSource.register(LogDataSource)
-
-
-def shim_reader(spark, cfg: LogFormatConfig):
-    """A ``spark.read.format("log")`` reader carrying ``cfg``'s full
-    option surface — the bridge ``read_log`` uses for non-UTF-8
-    charsets (r11), and a convenience for callers who already hold a
-    config object instead of option strings."""
-    reader = (
-        spark.read.format("log")
-        .option("pattern", cfg.pattern)
-        .option("fieldNames", ",".join(cfg.field_names))
-        .option("dateFormat", cfg.date_format)
-        .option("timeFormat", cfg.time_format)
-        .option(
-            "errorOnMismatch", "true" if cfg.error_on_mismatch else "false"
-        )
-        .option("strictNumeric", "true" if cfg.strict_numeric else "false")
-        .option("extensions", ",".join(cfg.extensions))
-        .option("charset", cfg.charset)
-    )
-    if cfg.data_types is not None:
-        reader = reader.option("dataTypes", ",".join(cfg.data_types))
-    if cfg.timestamp_format:
-        reader = reader.option("timestampFormat", cfg.timestamp_format)
-    return reader
 
 
 def _arrow_types():

@@ -35,24 +35,20 @@ Scale notes (100 TB posture):
     gzip falls back to file-granular parallelism exactly like the
     reference's one-reader-per-file model.
 
-Design decision — ``read_log`` is the performance path, not a Python
-DataSource: Spark 4's Python DataSource API gives the reference's
-``format("log")`` ergonomics (LogFormatPlugin.java:88,
-``@JsonTypeName("log")`` :86), but its readers execute IN PYTHON — every
-line crosses the Arrow boundary and the regex runs under Python ``re``,
-forfeiting whole-stage codegen and silently swapping regex engines
-(``java.util.regex`` vs ``re`` diverge on possessive quantifiers, named
-groups, \\p classes — the exact divergence class config validation guards
-against by probing the JVM engine). ``read_log(spark, path, cfg)`` is
-therefore the format registration Spark-first: the config dataclass plays
-the role of the JSON format block, and the parse stays a JVM expression
-tree. For users who specifically want ``spark.read.format("log")``,
-``log_datasource.register_log_datasource`` installs a parity-pinned
-Arrow-batched shim with the documented Python-engine trade (see that
-module's docstring).
+Design decision — ``read_log`` is the one parse engine: Spark 4's
+Python DataSource API gives the reference's ``format("log")`` ergonomics
+(LogFormatPlugin.java:88), but its readers run the regex under Python
+``re`` in Python workers, forfeiting codegen and swapping regex engines
+(possessive quantifiers, named groups, \\p classes diverge). Here the
+config dataclass plays the JSON format block, and every charset decodes
+and parses as JVM expressions over one line source (:func:`_line_source`).
+``log_datasource`` keeps ``format("log")`` as a separate, parity-pinned
+ergonomics shim; ``read_log`` never routes through it.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -312,6 +308,56 @@ def _extensions_glob(extensions: list[str]) -> str | None:
     return "*.{" + ",".join(alts) + "}"
 
 
+_DECODE_CONFS = (
+    "spark.sql.legacy.javaCharsets",
+    "spark.sql.legacy.codingErrorAction",
+)
+_DECODE_CONFS_LOCK = threading.Lock()
+
+
+def _decoded(raw: DataFrame, text: Column) -> DataFrame:
+    """``raw.select(text as value)`` with the confs Spark 4's ``decode``
+    needs for any charset and for U+FFFD on malformed bytes (the shim's
+    ``errors="replace"``). They bind at analysis, so they are set only while
+    building it (locked against concurrent callers), then restored."""
+    conf = raw.sparkSession.conf
+    with _DECODE_CONFS_LOCK:
+        prev = {k: conf.get(k, None) for k in _DECODE_CONFS}
+        for k in _DECODE_CONFS:
+            conf.set(k, "true")
+        try:
+            return raw.select(text.alias("value"))
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
+
+
+def _line_source(
+    spark: SparkSession, path, cfg: LogFormatConfig, *, stream: bool = False
+) -> DataFrame:
+    """The raw lines ``read_log`` and ``read_log_stream`` parse, one
+    ``value`` row each, decoded from ``cfg.charset`` in the JVM plan.
+    UTF-8/ASCII is read as is. A one-byte LF (cp1251, Shift_JIS, EBCDIC's
+    0x25 as ``lineSep``, whose CRLF leaves a CR the Java trim strips)
+    keeps the text source's raw-byte line split, so files still split.
+    UTF-16/32 files are read whole, decoded and split on CR/LF/CRLF."""
+    reader = spark.readStream if stream else spark.read
+    glob = _extensions_glob(cfg.extensions)
+    jvm = cfg.jvm_charset(spark)
+    if jvm in ("UTF-8", "US-ASCII"):
+        return reader.text(path, pathGlobFilter=glob)
+    lf = "\n".encode(cfg.charset)
+    text = F.decode(F.col("value").cast("binary"), jvm)
+    if len(lf) == 1:
+        sep = None if lf == b"\n" else lf.decode("ascii")
+        return _decoded(reader.text(path, lineSep=sep, pathGlobFilter=glob), text)
+    raw = reader.text(path, wholetext=True, pathGlobFilter=glob)
+    return _decoded(raw, F.explode(F.split(text, r"\r\n|\r|\n")))
+
+
 def read_log(
     spark: SparkSession,
     path: str,
@@ -334,44 +380,20 @@ def read_log(
     Drill's codec-then-format resolution. Set ``extensions=[]`` to parse
     every file the path matches.
 
-    ``cfg.charset`` (r11): ``spark.read.text`` decodes UTF-8 with
-    replacement — irreversibly lossy for a cp1251 export or an EBCDIC
-    mainframe dump — so a non-UTF-8 charset routes the scan through the
-    ``format("log")`` shim, whose Python readers decode per line with
-    the declared codec (EBCDIC-class charsets additionally disable
-    byte-range splitting: their line ends are not 0x0A bytes).
+    ``cfg.charset`` decodes in the JVM scan (:func:`_line_source`): cp1251,
+    EBCDIC and UTF-16 files parse with the same engine as UTF-8, malformed
+    bytes become U+FFFD, and a codec with no JVM charset is a setup
+    ``ValueError`` (``format("log")`` still reads it).
     """
-    import codecs as _codecs
-
-    if _codecs.lookup(cfg.charset).name not in ("utf-8", "ascii"):
-        if paths:
-            raise NotImplementedError(
-                "read_log(paths=[...]) with a non-UTF-8 charset: pass a "
-                "directory or glob instead (the shim expands one path)"
-            )
-        from .log_datasource import register_log_datasource, shim_reader
-
-        register_log_datasource(spark)
-        return shim_reader(spark, cfg).load(path)
-    reader = spark.read
-    glob = _extensions_glob(cfg.extensions)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    lines = reader.text(paths if paths else path)
-    return parse_lines(lines, cfg)
+    return parse_lines(_line_source(spark, paths if paths else path, cfg), cfg)
 
 
 def read_log_stream(spark: SparkSession, path: str, cfg: LogFormatConfig) -> DataFrame:
-    """Streaming variant: same parse over ``spark.readStream.text``.
+    """Streaming variant: same line source and parse as ``read_log``.
 
     No reference counterpart (the reference is batch-only); see SURVEY.md §2
     streaming row. Combine with ``withWatermark`` + ``window`` downstream.
-    Extension dispatch applies exactly as in ``read_log`` — files dropped
-    into a watched directory parse only if their extension is registered.
+    Extension dispatch (watched files parse only if their extension is
+    registered) and ``cfg.charset`` apply exactly as in ``read_log``.
     """
-    reader = spark.readStream
-    glob = _extensions_glob(cfg.extensions)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    lines = reader.text(path)
-    return parse_lines(lines, cfg)
+    return parse_lines(_line_source(spark, path, cfg, stream=True), cfg)

@@ -192,6 +192,32 @@ def test_format_log_matches_read_log_on_dirty_bytes(spark, tmp_path):
         assert got == want, name
 
 
+def test_format_log_matches_read_log_on_syslog_preset(spark, tmp_path):
+    """The SYSLOG preset's year-less timestamps land in 1970 on both
+    paths (strptime alone would say 1900), space-padded days included."""
+    from drill_logfile_plugin_spark import SYSLOG
+
+    p = tmp_path / "sys.log"
+    p.write_text(
+        "Aug 13 23:01:02 host1 sshd[4123]: Failed password for root\n"
+        "Aug  3 00:00:01 host2 CRON: session opened\n"
+        "not syslog at all\n"
+    )
+    register_log_datasource(spark)
+    shim = (
+        spark.read.format("log")
+        .option("pattern", SYSLOG.pattern)
+        .option("fieldNames", ",".join(SYSLOG.field_names))
+        .option("dataTypes", ",".join(SYSLOG.data_types))
+        .option("timestampFormat", SYSLOG.timestamp_format)
+        .load(str(p))
+    )
+    ref = read_log(spark, str(p), SYSLOG)
+    assert shim.schema == ref.schema
+    assert _sorted(shim) == _sorted(ref)
+    assert {r.ts.year for r in ref.collect() if r.ts is not None} == {1970}
+
+
 def test_format_log_splits_large_uncompressed_file(spark, tmp_path):
     """Byte-range splitting: a file scanned with a small splitSize plans
     >1 input partition yet returns row-for-row what read_log returns —

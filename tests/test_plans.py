@@ -132,6 +132,24 @@ def test_log_parse_is_single_codegen_no_python(spark, tmp_path):
     assert "Exchange" not in plan
 
 
+@pytest.mark.parametrize("charset", ["cp1251", "cp037", "utf-16"])
+def test_legacy_charset_log_parse_has_no_python(spark, tmp_path, charset):
+    """A declared charset decodes inside the JVM scan: no Python node in
+    the plan, for line-split (cp1251), lineSep (cp037) and whole-file
+    (UTF-16) decodes alike."""
+    log = tmp_path / "plan.log"
+    log.write_bytes("070823 21:00:32  1 Connect root\n".encode(charset))
+    cfg = LogFormatConfig(
+        pattern=r"(\d{6})\s(\d{2}:\d{2}:\d{2})\s+(\d+)\s(\w+)\s+(.+)",
+        field_names=["date", "time", "pid", "action", "query"],
+        data_types=["DATE", "TIME", "INT", "VARCHAR", "VARCHAR"],
+        date_format="yyMMdd",
+        charset=charset,
+    )
+    plan = plan_of(read_log(spark, str(log), cfg))
+    assert "Python" not in plan, plan
+
+
 def test_log_parse_prunes_unused_extracts(spark, tmp_path):
     """Genuine projection pushdown (reference only declared it,
     LogFormatPlugin.java:77-79): selecting one field must drop the other
